@@ -23,7 +23,7 @@ Two execution tiers, mirroring how the reference itself splits them:
 
 from __future__ import annotations
 
-from collections import defaultdict
+from collections import Counter, defaultdict
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -83,9 +83,12 @@ def pagerank(
             (F.lit(base) + F.lit(damping) * F.col("contrib")).alias("pr"),
         ).unionAll(no_in.select("id", F.lit(float(base)).alias("pr")))
         # pr feeds exactly ONE consumer per round, so the lazy plan grows
-        # linearly — the whole power iteration compiles to a single job with
-        # chained shuffles. A mid-loop checkpoint every 6 rounds caps
-        # optimizer time on very long runs without a job per round.
+        # linearly, one shuffle per round. It is not a single job: under
+        # AQE each shuffle stage submits its own job, and even a lazy
+        # localCheckpoint runs its plan's shuffle stages when it is taken
+        # (10 iterations at sf0.01: 29 jobs, 19 of them before the returned
+        # frame is collected). A mid-loop checkpoint every 6 rounds caps
+        # optimizer time on very long runs.
         if it % 6 == 5:
             pr = pr.localCheckpoint(eager=False)
     return pr
@@ -529,7 +532,13 @@ def graph_scc_tarjan(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides). Closure size is quadratic in the largest SCC — fine at oracle
     scale (sf <= 0.01), which is why the Spark side doesn't use it."""
     edges = _collect_edges(_scc_input_edges(spark, sf_dir), cols=("src", "dst"))
+    return local_df(spark, _tarjan_multi_scc(edges), "id bigint, scc bigint")
 
+
+def _tarjan_multi_scc(edges) -> list[tuple[int, int]]:
+    """Iterative Tarjan over driver-side (src, dst) pairs, O(E + V log V):
+    the (id, scc) rows of every vertex in a multi-member strongly
+    connected component, scc = the component's min member, ids ascending."""
     graph: dict[int, list[int]] = defaultdict(list)
     for s, d in edges:
         graph[s].append(d)
@@ -580,10 +589,8 @@ def graph_scc_tarjan(spark: SparkSession, sf_dir: str) -> DataFrame:
             if work:
                 parent = work[-1][0]
                 low[parent] = min(low[parent], low[v])
-    rows = [(int(n), int(comp[n])) for n in nodes_all]
-    multi = {c for c in comp.values() if sum(1 for x in comp.values() if x == c) > 1}
-    out = local_df(spark, rows, "id bigint, scc bigint")
-    return out.filter(F.col("scc").isin([int(c) for c in multi]) if multi else F.lit(False))
+    size = Counter(comp.values())
+    return [(int(n), int(comp[n])) for n in nodes_all if size[comp[n]] > 1]
 
 
 BETW_LEVELS = 10  # >= max BFS depth from the sampled sources (9 at sf0.001)

@@ -38,9 +38,12 @@ def bfs_levels(
     localCheckpointed per level so the plan stays flat."""
     visited = sources.select(src_col, "node", F.lit(0).alias("dist"))
     frontier = visited
-    # shallow traversals (≤4 hops) run fully lazy — one job total; the
-    # frontier is referenced twice per level so plan size is 2^depth, which
-    # only matters for deep walks, where we checkpoint per level instead.
+    # shallow traversals (≤4 hops) run fully lazy, with no per-level
+    # checkpoint — but not as one job: under AQE every broadcast and
+    # shuffle stage of the unrolled plan submits its own job
+    # (graph_bfs_levels, depth 3: 34 jobs on collect). The frontier is
+    # referenced twice per level so plan size is 2^depth, which only
+    # matters for deep walks, where we checkpoint per level instead.
     deep = max_depth > 4
     e = edges.select("src", "dst")
     if deep:

@@ -31,7 +31,7 @@ from neumann_spark.registry import register
 from neumann_spark.session import scratch_dir as _scratch_dir
 from neumann_spark.session import stage_move_part as _stage_move_part
 from neumann_spark.session import (bounded_actions as _bounded_actions,
-                                   empty_df, local_df, run_actions_parallel)
+                                   local_df, run_actions_parallel)
 
 LSH_PLANES = 4
 DIM = 64
@@ -4137,7 +4137,7 @@ def _graph_batch_search(spark: SparkSession, sf_dir: str,
     # expanded_df seeds from a true empty LocalRelation (zero partitions,
     # pruned from unions at optimization time)
     evald = adc(warm).localCheckpoint(eager=False)
-    expanded_df = empty_df(spark, "qid bigint, vec_id bigint")
+    expanded_df = local_df(spark, [], "qid bigint, vec_id bigint")
     for _ in range(rounds):
         unexp = evald.join(expanded_df, ["qid", "vec_id"], "left_anti")
         fr_pairs = [

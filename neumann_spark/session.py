@@ -10,6 +10,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.conversion import LocalDataToArrowConversion
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     StructType,
     _create_converter,
@@ -75,64 +77,35 @@ def get_spark(app_name: str = "neumann_spark") -> SparkSession:
     return spark
 
 
-def empty_df(spark: SparkSession, schema) -> DataFrame:
-    """An empty frame as a true JVM `LocalRelation <empty>`.
-
-    `spark.createDataFrame([], schema)` is RDD-backed: it parallelizes the
-    empty list over defaultParallelism, so every action on a chain rooted
-    at such a frame pays N (32 here) no-op tasks, and — being a LogicalRDD,
-    not a LocalRelation — it is invisible to PropagateEmptyRelation, so
-    union chains never prune it. The engine's overlay frames (extra
-    labels, embedding metadata, entity props) root every mutation chain,
-    which made this the single hottest fixed cost of the WAL/DML query
-    walls (measured 2.4x on a union-chain probe, §5). Routing through the
-    JVM list-based createDataFrame yields a real empty LocalRelation:
-    zero partitions, zero tasks, pruned from unions at optimization time.
-    """
-    if isinstance(schema, str):
-        schema = _parse_datatype_string(schema)
-    jschema = spark._jvm.org.apache.spark.sql.types.DataType.fromJson(
-        schema.json())
-    jdf = spark._jsparkSession.createDataFrame(
-        spark._jvm.java.util.ArrayList(), jschema)
-    df = DataFrame(jdf, spark)
-    df._schema = schema
-    return df
-
-
 def local_df(spark: SparkSession, data, schema) -> DataFrame:
-    """Driver-local batch rows as a ONE-slice frame (empty -> `empty_df`).
+    """Driver-local rows as a JVM `LocalRelation`, shipped through Arrow.
 
-    Drop-in for two-arg `spark.createDataFrame(rows, schema)`: plain
-    createDataFrame spreads a handful of driver rows over
-    defaultParallelism partitions (32 here), so each union / mutation
-    chain action pays 32 tasks per batch frame — measured 7.5x on a
-    union-chain probe (§5). This mirrors `SparkSession._create_dataframe`
-    exactly (same verifier, same converter, same toInternal, same
-    applySchemaToPythonRDD tail) but parallelizes with numSlices=1; at
-    production scale these frames are statement literals and command
-    results — never data-proportional — so one slice is the right
-    cardinality on a cluster too.
+    Drop-in for two-arg `spark.createDataFrame(rows, schema)`, with the
+    same type verifier and the same dict/Row-to-tuple converter. Plain
+    createDataFrame pickles the rows into a Python RDD, so every later
+    job that scans the frame starts a Python worker for zero input bytes,
+    and the engine's overlays, statement literals and BFS sources root
+    most of its chains. Here the rows become one Arrow table that Spark
+    decodes in the JVM: below `spark.sql.execution.arrow.
+    localRelationThreshold` it is a real `LocalRelation` (collected
+    without a job, sized exactly for join planning, and pruned from
+    unions by PropagateEmptyRelation when empty); above it, an
+    Arrow-batch RDD decoded in the JVM. Neither starts a Python worker.
     """
-    data = list(data)
     if isinstance(schema, str):
         schema = _parse_datatype_string(schema)
     if not isinstance(schema, StructType):
         raise TypeError(f"local_df needs a StructType/DDL schema, got {schema!r}")
-    if not data:
-        return empty_df(spark, schema)
     verify = _make_type_verifier(schema)
     converter = _create_converter(schema)
-    internal = []
+    rows = []
     for row in data:
         verify(row)
-        internal.append(schema.toInternal(converter(row)))
-    rdd = spark._sc.parallelize(internal, 1)
-    jrdd = spark._jvm.SerDeUtil.toJavaArray(rdd._to_java_object_rdd())
-    jdf = spark._jsparkSession.applySchemaToPythonRDD(jrdd.rdd(), schema.json())
-    df = DataFrame(jdf, spark)
-    df._schema = schema
-    return df
+        rows.append(converter(row))
+    # createDataFrame casts the table to the session's Arrow types
+    table = (LocalDataToArrowConversion.convert(rows, schema, False) if rows
+             else to_arrow_schema(schema).empty_table())
+    return spark.createDataFrame(table, schema)
 
 
 _BOUNDED_SCOPE_LOCK = __import__("threading").Lock()

@@ -40,3 +40,18 @@ def duck():
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
         )
     yield con
+
+
+def count_jobs(spark, action, group: str):
+    """Run `action()` under its own job group; return its result and the
+    number of Spark jobs it submitted (from the status store, after the
+    listener bus has delivered every job event)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -61,6 +61,31 @@ def test_similar_connected(engine):
     assert 0 < len(top) <= 5
 
 
+def test_read_job_ceilings_after_writes(spark):
+    """Reads after a round of writes stay on JVM-local frames: the written
+    node, edge and embedding overlays and the CONNECTED TO BFS source are
+    LocalRelations, so no read runs a job to scan them. Job counts do not
+    move with machine load, so a return to Python-RDD frames (5 and 16
+    jobs here) fails the ceilings."""
+    from neumann_spark.engine import NeumannSparkEngine
+    from tests.conftest import count_jobs
+
+    eng = NeumannSparkEngine(spark, SF_DIR)
+    nid = eng.execute("NODE CREATE person {name: 'ceil'}").collect()[0]["id"]
+    eng.execute(f"EDGE CREATE {nid} -> 17 : knows").collect()
+    eng.execute("EMBED 'ceil:1' [" + ",".join(["0.25"] * 64) + "]").collect()
+    nbrs, nbr_jobs = count_jobs(
+        spark, lambda: eng.execute(f"NEIGHBORS '{nid}'").collect(),
+        "ceil_neighbors")
+    assert [r["neighbor_id"] for r in nbrs] == [17]
+    top, sim_jobs = count_jobs(
+        spark,
+        lambda: eng.execute("SIMILAR 'ceil:1' TOP 5 CONNECTED TO '17'").collect(),
+        "ceil_similar_connected")
+    assert 0 < len(top) <= 5
+    assert nbr_jobs <= 3 and sim_jobs <= 12, (nbr_jobs, sim_jobs)
+
+
 def test_find_rows_where(engine):
     out = engine.execute("FIND ROWS customer WHERE c_acctbal > 9900.0").collect()
     assert out and all(r["source"] == "relational" for r in out)

@@ -370,26 +370,47 @@ def test_batch_probe_join_form_is_hash_join(spark, tmp_path):
         assert (" IN (" in scan) or (" INSET " in scan), scan
 
 
-def test_local_df_one_slice_and_empty_local_relation(spark):
-    """The driver-local batch helpers (§5): `local_df` must carry a handful
-    of statement rows in ONE partition (plain createDataFrame spreads them
-    over defaultParallelism — 32 no-op tasks per action on every mutation
-    chain), produce values/schema identical to createDataFrame, and
-    `empty_df` must be a true LocalRelation so PropagateEmptyRelation can
-    prune it out of the overlay union chains entirely."""
-    from neumann_spark.session import empty_df, local_df
+def test_local_df_local_relation_and_empty_local_relation(spark):
+    """The driver-local batch helper (§5): `local_df` must ship statement
+    rows to the JVM as a `LocalRelation` (plain createDataFrame pickles
+    them into a Python RDD, so every job that scans the frame starts a
+    Python worker), so collecting it submits no Spark job at all; its
+    schema and values must equal createDataFrame's for every column type
+    the package passes; and an empty `local_df` must be an empty
+    LocalRelation so PropagateEmptyRelation can prune it out of the
+    overlay union chains entirely."""
+    import datetime
+    from decimal import Decimal
 
-    rows = [(1, "a", [1.0, 2.0]), (2, None, [3.0])]
-    schema = "id bigint, s string, v array<double>"
+    from neumann_spark.session import local_df
+    from tests.conftest import count_jobs
+
+    rows = [
+        (1, 2, 0.1, "a", [1.5, 0.1], [3, 4], [1.0, 2.0], Decimal("12.35"),
+         datetime.date(1998, 12, 1), datetime.datetime(2024, 1, 2, 3, 4, 5),
+         True, b"\x00\x01"),
+        (2, None, None, None, None, [], [], None, None, None, None, None),
+    ]
+    schema = ("id bigint, n int, x double, s string, vf array<float>, "
+              "vb array<bigint>, v array<double>, price decimal(12,2), "
+              "d date, ts timestamp, ok boolean, raw binary")
     ours = local_df(spark, rows, schema)
     ref = spark.createDataFrame(rows, schema)
-    assert ours.rdd.getNumPartitions() == 1
-    assert ref.rdd.getNumPartitions() > 1  # the cost local_df removes
+    opt = ours._jdf.queryExecution().optimizedPlan()
+    assert opt.getClass().getSimpleName() == "LocalRelation", opt.toString()
+    got, jobs = count_jobs(spark, ours.collect, "local_df_collect")
+    assert jobs == 0
     assert ours.schema == ref.schema
-    assert sorted(map(tuple, ours.collect())) == sorted(map(tuple, ref.collect()))
+    assert got == ref.collect()
+    # dict and Row inputs map onto the schema's fields as createDataFrame's do
+    from pyspark.sql import Row
+
+    named = [{"id": 1, "s": "a"}, Row(id=2, s="b")]
+    assert (local_df(spark, named, "id bigint, s string").collect()
+            == spark.createDataFrame(named, "id bigint, s string").collect())
 
     # empty frame: zero partitions, pruned from a union at optimize time
-    emp = emp0 = empty_df(spark, schema)
+    emp = emp0 = local_df(spark, [], schema)
     assert emp.schema == ref.schema
     assert emp.count() == 0
     assert emp.rdd.getNumPartitions() == 0
